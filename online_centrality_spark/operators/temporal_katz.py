@@ -9,34 +9,20 @@ ever-active node to the boundary time. All parameterizations
 
 The per-edge recurrence is order-dependent whenever edges chain through
 shared nodes within a window (``graph_simulator.py:34-39``), so a window
-cannot be one big commutative aggregation. Three exact execution paths:
+cannot be one big commutative aggregation. Two exact execution paths:
 
-- **fold** (any weighter): the window's edges, sorted by the stable
-  global rank ``seq``, stream through one Arrow ``mapInPandas`` task that
-  keeps the dense ``(P, N)`` rank matrix and applies the recurrence with
-  O(P) vector ops per edge.
+- **fold** (any weighter; the oracle path): the window's edges, sorted
+  by the stable global rank ``seq``, stream through one Arrow
+  ``mapInPandas`` task that keeps the dense ``(P, N)`` rank matrix and
+  applies the recurrence with O(P) vector ops per edge.
 
-- **scan** (factorizing weighters — Exp/Const(1), which all of the
-  reference's shipped experiments use): in the basis "decayed to window
-  end ``t_hi``", the update becomes the *affine* recurrence
-  ``y[:,v] += beta * (y[:,u] + w(t_hi - t))`` with no per-touch decay
-  (exponential decay telescopes across a node's activation gaps). A
-  window is range-partitioned on ``seq`` into contiguous segments; each
-  segment is summarized *in parallel* as an affine map ``(M, c)`` with
-  ``M`` built by O(P*N) vectorized row updates per edge; the driver then
-  combines the summaries left-to-right — ``y <- M_i @ y + c_i`` — which
-  is exact because affine maps compose associatively. This is the
-  distributed-exact scale path: edges stay distributed, state is a small
-  dense vector (the node space of an actor graph is tiny relative to the
-  edge stream). CAVEAT: M's entries grow like (1 + beta*density)^E
-  within a window, so this path is only usable for small windows on tiny
-  node spaces — busy windows overflow float64 even when the true scores
-  are bounded. Use ``walk`` beyond that regime.
-
-- **walk** (factorizing weighters; the SCALE path): vectorized Jacobi
-  path-length iteration with segmented prefix sums over chain-closed
-  partitions — any node count, numerically stable, one Spark job per
-  replay batch. See ``walk.py``.
+- **walk** (factorizing weighters — Exp/Const(1), which all of the
+  reference's shipped experiments use; the SCALE path): in the basis
+  "decayed to batch end" (exponential decay telescopes across a node's
+  activation gaps) the recurrence needs no per-touch decay, and the
+  batch is solved by vectorized Jacobi path-length iteration with
+  segmented prefix sums over chain-closed partitions — any node count,
+  numerically stable, one Spark job per replay batch. See ``walk.py``.
 
 State lives on the driver as O(N*P) numpy arrays between supersteps
 (broadcast into tasks), checkpointed by the superstep driver.
@@ -52,94 +38,6 @@ from pyspark.sql import types as T
 from ..functions.weights import ConstantWeighter, Weighter
 from .walk import decay_rate, plan_decay_chunks, run_walk_batch
 
-_BATCH_SUMMARY_SCHEMA = T.StructType(
-    [
-        T.StructField("wid", T.IntegerType(), False),  # window index in batch
-        T.StructField("k", T.LongType(), False),
-        T.StructField("m", T.BinaryType(), False),
-        T.StructField("c", T.BinaryType(), False),
-        T.StructField("touched", T.BinaryType(), True),
-    ]
-)
-
-
-def _run_scan_batch(
-    df, his, nparts, presorted, init_state, apply_edges, track_touched,
-    finalize=None,
-):
-    """Superstep batching: ONE Spark job summarizes B windows at once.
-
-    Each seq-contiguous partition splits its (key-monotone) rows at the
-    window boundaries ``his`` (window w covers ``his[w-1] < key <=
-    his[w]``) and builds an independent affine summary per window it
-    touches. The driver then replays the per-window combines — so a
-    457-snapshot replay needs ~457/B jobs instead of 457, amortizing task
-    scheduling and the Python-runner setup that otherwise dominate small
-    windows.
-    """
-    his_arr = np.asarray([float(h) for h in his])
-
-    def kernel(batches):
-        states: dict[int, dict] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key = pdf["key"].to_numpy(np.float64)
-            wids = np.searchsorted(his_arr, key, side="left")
-            change = np.nonzero(np.diff(wids))[0] + 1
-            starts = np.concatenate([[0], change])
-            ends = np.concatenate([change, [len(wids)]])
-            for s, e in zip(starts, ends):
-                wid = int(wids[s])
-                st = states.get(wid)
-                if st is None:
-                    st = init_state()
-                    st["first_seq"] = int(pdf["seq"].iloc[s])
-                    states[wid] = st
-                sl = pdf.iloc[s:e]
-                if track_touched:
-                    st["touched"][sl["src"].to_numpy(np.int64)] = 1
-                    st["touched"][sl["dst"].to_numpy(np.int64)] = 1
-                apply_edges(
-                    st,
-                    float(his_arr[wid]),
-                    key[s:e],
-                    sl["src"].tolist(),
-                    sl["dst"].tolist(),
-                )
-        rows = []
-        for wid, st in states.items():
-            if finalize is not None:
-                m_bytes, c_bytes = finalize(st)
-            else:
-                m_bytes = np.asarray(st["m"], np.float64).tobytes()
-                c_bytes = np.asarray(st["c"], np.float64).tobytes()
-            rows.append(
-                (
-                    wid,
-                    st["first_seq"],
-                    m_bytes,
-                    c_bytes,
-                    st["touched"].tobytes() if track_touched else b"",
-                )
-            )
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["wid", "k", "m", "c", "touched"]
-            )
-
-    sel = df.select("key", "src", "dst", "seq")
-    if not presorted:
-        sel = sel.repartitionByRange(nparts, "seq").sortWithinPartitions("seq")
-    rows = sel.mapInPandas(kernel, schema=_BATCH_SUMMARY_SCHEMA).collect()
-    by_w: dict[int, list] = {}
-    for r in rows:
-        by_w.setdefault(r["wid"], []).append(r)
-    for w in by_w:
-        by_w[w].sort(key=lambda r: r["k"])
-    return by_w
-
-
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("node", T.LongType(), False),
@@ -149,169 +47,27 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _can_scan(weighters: list[Weighter]) -> bool:
+def _can_walk(weighters: list[Weighter]) -> bool:
     return all(
         w.factorizes or (isinstance(w, ConstantWeighter) and w.c == 1.0)
         for w in weighters
     )
 
 
-def _np2d_identity(rows: int, p: int) -> np.ndarray:
-    """(rows, p*rows) block layout: per-param identity blocks side by side."""
-    m2 = np.zeros((rows, p * rows), dtype=np.float64)
-    eye = np.eye(rows)
-    for j in range(p):
-        m2[:, j * rows : (j + 1) * rows] = eye
-    return m2
-
-
-def _np2d_finalize(rows: int, p: int):
-    def finalize(st):
-        m = st["m"].reshape(rows, p, rows).transpose(1, 0, 2)
-        c = st["c"].T
-        return (
-            np.ascontiguousarray(m).tobytes(),
-            np.ascontiguousarray(c).tobytes(),
-        )
-
-    return finalize
-
-
-def _affine_closures_tk(n, p, betas, weighters):
-    """(init_state, apply_edges, dim, finalize) for the tk affine kernel.
-
-    Two inner kernels by param count: python-float list rows win below
-    ~5 params (numpy call overhead dominates tiny rows); above that, an
-    allocation-free in-place numpy layout ``M2 (n, p*n)`` does one
-    contiguous row op per edge — less CPU *and* less allocator pressure,
-    which is what multicore scaling hinges on.
-    """
-    if p < 5:
-        def init_state():
-            ident = np.eye(n).tolist()
-            return {
-                "m": [[row[:] for row in ident] for _ in range(p)],
-                "c": [[0.0] * n for _ in range(p)],
-                "touched": np.zeros(n, dtype=np.uint8),
-            }
-
-        def apply_edges(st, hi_w, key, src, dst):
-            for j in range(p):
-                b = betas[j]
-                mj, cj = st["m"][j], st["c"][j]
-                wj = weighters[j].weight_np(hi_w - key).tolist()
-                for i, (u, v) in enumerate(zip(src, dst)):
-                    ru = mj[u]
-                    if u == v:
-                        mj[v] = [x * (1.0 + b) for x in ru]
-                        cj[v] = cj[v] * (1.0 + b) + b * wj[i]
-                    else:
-                        rv = mj[v]
-                        mj[v] = [x + b * y for x, y in zip(rv, ru)]
-                        cj[v] += b * (cj[u] + wj[i])
-
-        return init_state, apply_edges, n, None
-
-    b_arr = np.asarray(betas)
-    btile = np.repeat(b_arr, n)
-    onep_tile = 1.0 + btile
-    onep = 1.0 + b_arr
-
-    def init_state():
-        return {
-            "m": _np2d_identity(n, p),
-            "c": np.zeros((n, p), dtype=np.float64),
-            "touched": np.zeros(n, dtype=np.uint8),
-        }
-
-    def apply_edges(st, hi_w, key, src, dst):
-        m2, c2 = st["m"], st["c"]
-        wvec = np.empty((len(key), p), dtype=np.float64)
-        for j in range(p):
-            wvec[:, j] = weighters[j].weight_np(hi_w - key)
-        for i, (u, v) in enumerate(zip(src, dst)):
-            if u == v:
-                m2[v] *= onep_tile
-                c2[v] = c2[v] * onep + b_arr * wvec[i]
-            else:
-                m2[v] += btile * m2[u]
-                c2[v] += b_arr * (c2[u] + wvec[i])
-
-    return init_state, apply_edges, n, _np2d_finalize(n, p)
-
-
-def _affine_closures_ttk(n, p, k, betas, weighters):
-    """Layered (truncated) variant over the stacked k*n space."""
-    d = k * n
-    if p < 5:
-        def init_state():
-            ident = np.eye(d).tolist()
-            return {
-                "m": [[row[:] for row in ident] for _ in range(p)],
-                "c": [[0.0] * d for _ in range(p)],
-                "touched": np.zeros(n, dtype=np.uint8),
-            }
-
-        def apply_edges(st, hi_w, key, src, dst):
-            for j in range(p):
-                b = betas[j]
-                mj, cj = st["m"][j], st["c"][j]
-                wj = weighters[j].weight_np(hi_w - key).tolist()
-                for i, (u, v) in enumerate(zip(src, dst)):
-                    w = wj[i]
-                    for layer in range(k - 1, 0, -1):
-                        rv_i = layer * n + v
-                        ru_i = (layer - 1) * n + u
-                        ru = mj[ru_i]
-                        rv = mj[rv_i]
-                        mj[rv_i] = [x + b * y for x, y in zip(rv, ru)]
-                        cj[rv_i] += b * (cj[ru_i] + w)
-                    cj[v] += b * w
-
-        return init_state, apply_edges, d, None
-
-    b_arr = np.asarray(betas)
-    btile = np.repeat(b_arr, d)
-
-    def init_state():
-        return {
-            "m": _np2d_identity(d, p),
-            "c": np.zeros((d, p), dtype=np.float64),
-            "touched": np.zeros(n, dtype=np.uint8),
-        }
-
-    def apply_edges(st, hi_w, key, src, dst):
-        m2, c2 = st["m"], st["c"]
-        wvec = np.empty((len(key), p), dtype=np.float64)
-        for j in range(p):
-            wvec[:, j] = weighters[j].weight_np(hi_w - key)
-        for i, (u, v) in enumerate(zip(src, dst)):
-            wi = wvec[i]
-            for layer in range(k - 1, 0, -1):
-                rv_i = layer * n + v
-                ru_i = (layer - 1) * n + u
-                m2[rv_i] += btile * m2[ru_i]
-                c2[rv_i] += b_arr * (c2[ru_i] + wi)
-            c2[v] += b_arr * wi
-
-    return init_state, apply_edges, d, _np2d_finalize(d, p)
-
-
 class TemporalKatz:
     """Param-vectorized temporal Katz over a dictionary-encoded node space.
 
     ``params``: list of (beta, Weighter). ``n_nodes``: size of the node
-    dictionary. ``path``: 'auto' | 'fold' | 'scan' | 'walk'.
+    dictionary. ``path``: 'auto' | 'fold' | 'walk'; 'auto' picks ``walk``
+    when every weighter factorizes, else ``fold``.
 
     Path selection: ``fold`` is exact for every weighter (single ordered
-    Arrow task); ``scan`` distributes via dense affine segment summaries —
-    viable only for tiny node spaces AND light windows (its transfer
-    matrices overflow on busy windows, see walk.py); ``walk`` is the scale
-    path — vectorized path-length iteration, any node count, numerically
-    stable, distributed across chain-closed partitions (``walk_layout``:
-    None = one task; 'preserve' = trust the df's partitioning to be
-    node-disjoint; or a column name to repartition by a node-disjoint
-    closure key such as a component id).
+    Arrow task); ``walk`` is the scale path — vectorized path-length
+    iteration, any node count, numerically stable, distributed across
+    chain-closed partitions (``walk_layout``: None = one task; 'preserve'
+    = trust the df's partitioning to be node-disjoint; 'components' =
+    derive a closure key from weakly connected components; or a column
+    name to repartition by a node-disjoint closure key).
     """
 
     measure = "tk"
@@ -321,8 +77,6 @@ class TemporalKatz:
         params: list[tuple[float, Weighter]],
         n_nodes: int,
         path: str = "auto",
-        scan_partitions: int | None = None,
-        presorted: bool = False,
         walk_layout: str | None = None,
         walk_partitions: int | None = None,
         walk_tol: float = 1e-12,
@@ -338,14 +92,15 @@ class TemporalKatz:
         self.n = n_nodes
         self.p = len(params)
         if path == "auto":
-            path = "scan" if _can_scan(self.weighters) else "fold"
-        if path in ("scan", "walk") and not _can_scan(self.weighters):
-            raise ValueError(f"{path} path requires factorizing weighters")
+            path = "walk" if _can_walk(self.weighters) else "fold"
         if path == "walk":
+            # raises for a weighter that does not factorize
             self._lambda_max = max(decay_rate(w) for w in self.weighters)
+        elif path != "fold":
+            raise ValueError(
+                f"unknown path {path!r}: use 'fold' or 'walk' (or 'auto')"
+            )
         self.path = path
-        self.scan_partitions = scan_partitions
-        self.presorted = presorted
         self.walk_layout = walk_layout
         self.walk_partitions = walk_partitions
         self.walk_tol = walk_tol
@@ -358,7 +113,7 @@ class TemporalKatz:
     def reset(self) -> None:
         self.ranks = np.zeros((self.p, self.n), dtype=np.float64)
         self.last = np.full(self.n, np.nan)  # last activation (nan = never)
-        self.basis: float | None = None  # scan path: time the ranks are decayed to
+        self.basis: float | None = None  # walk path: time the ranks are decayed to
 
     def state_dict(self) -> dict:
         return {
@@ -386,15 +141,13 @@ class TemporalKatz:
         empty means an inactive interval (state untouched — decay is lazy).
         """
         if window is None:
-            if self.path in ("scan", "walk"):
+            if self.path == "walk":
                 self._rebase(hi)
             return
         if self.path == "fold":
             self._superstep_fold(window)
-        elif self.path == "walk":
-            self._run_batch_walk(window, [(0, hi, hi)], readouts=False)
         else:
-            self._superstep_scan(window, hi)
+            self.run_batch(window, [(0, hi, hi)], readouts=False)
 
     # fold path: one ordered Arrow task, exact for every weighter
     def _superstep_fold(self, window: DataFrame) -> None:
@@ -444,30 +197,19 @@ class TemporalKatz:
         self.ranks = np.stack(result["ranks"].to_numpy()).T.copy()
         self.last = result["last"].to_numpy(dtype=np.float64).copy()
 
-    # scan path: distributed affine segment summaries
+    # walk path: state is held decayed to ``self.basis``
     def _rebase(self, new_basis: float) -> None:
-        """Decay scan-path state from the current basis to ``new_basis``."""
+        """Decay walk-path state from the current basis to ``new_basis``."""
         if self.basis is not None and new_basis != self.basis:
             dt = new_basis - self.basis
             for j, w in enumerate(self.weighters):
                 self.ranks[j] *= w.weight(dt)
         self.basis = new_basis
 
-    def _superstep_scan(self, window: DataFrame, hi: float) -> None:
-        # single-window case of the batched path (read-out discarded)
-        self.run_batch(window, [(0, hi, hi)], readouts=False)
-
-    # -- superstep batching (scan path) ---------------------------------
     def can_batch(self) -> bool:
-        if self.path == "walk":
-            return True
-        return self.path == "scan" and self.n <= 256
+        return self.path == "walk"
 
-    def _batch_closures(self):
-        return _affine_closures_tk(
-            self.n, self.p, [float(b) for b in self.betas], self.weighters
-        )
-
+    # -- walk path (distributed vectorized path-length iteration) --------
     def run_batch(
         self,
         df: DataFrame,
@@ -480,51 +222,6 @@ class TemporalKatz:
         must contain exactly the edges of those windows (key <= last hi).
         Returns {interval_id: readout frame}; state ends at the last hi.
         """
-        if self.path == "walk":
-            return self._run_batch_walk(df, intervals, readouts=readouts)
-        init_state, apply_edges, dim, finalize = self._batch_closures()
-        nparts = (
-            self.scan_partitions
-            or df.sparkSession.sparkContext.defaultParallelism
-        )
-        by_w = _run_scan_batch(
-            df,
-            [hi for _, hi, _ in intervals],
-            nparts,
-            self.presorted,
-            init_state,
-            apply_edges,
-            True,
-            finalize=finalize,
-        )
-        p, n = self.p, self.n
-        outs: dict[int, pd.DataFrame] = {}
-        for idx, (iid, hi, rt) in enumerate(intervals):
-            if self.basis is None:
-                self.basis = float(hi)
-            self._rebase(float(hi))
-            rows = by_w.get(idx, [])
-            if rows:
-                y = self.ranks
-                mask = np.zeros(n, dtype=bool)
-                for r in rows:
-                    m = np.frombuffer(r["m"], np.float64).reshape(p, dim, dim)
-                    c = np.frombuffer(r["c"], np.float64).reshape(p, dim)
-                    y = np.einsum("pij,pj->pi", m, y) + c
-                    mask |= np.frombuffer(r["touched"], np.uint8).astype(bool)
-                self.ranks = np.ascontiguousarray(y)
-                self.last[mask] = float(hi)
-            if readouts:
-                outs[iid] = self.readout(float(rt))
-        return outs
-
-    # -- walk path (distributed vectorized path-length iteration) --------
-    def _run_batch_walk(
-        self,
-        df: DataFrame,
-        intervals: list[tuple[int, float, float]],
-        readouts: bool = True,
-    ) -> dict[int, pd.DataFrame]:
         chunks = plan_decay_chunks(intervals, self._lambda_max)
         chunk_plan = [(float(c[-1][1]), c) for c in chunks]
         t_first = chunk_plan[0][0]
@@ -610,7 +307,7 @@ class TemporalKatz:
         idx = np.nonzero(active)[0]
         frames = []
         for j, pid in enumerate(self.param_ids):
-            if self.path in ("scan", "walk"):
+            if self.path == "walk":
                 base = self.basis if self.basis is not None else boundary
                 scores = self.ranks[j, idx] * self.weighters[j].weight(boundary - base)
             else:
@@ -630,8 +327,8 @@ class TruncatedTemporalKatz(TemporalKatz):
     Layers update in descending order so layer ``l`` reads layer ``l-1``
     pre-update (``temporal_katz_computer.py:104-117``); every layer is
     exported (param id suffix ``_length_limit_<l+1>``).
-    State is the stacked (P, k*N) vector; the scan path's affine maps act
-    on the stacked space (block lower-triangular by layer).
+    State is the stacked (P, k*N) vector; the walk path runs exactly
+    ``k`` prefix passes per block over it (``walk.py``).
     """
 
     measure = "ttk"
@@ -642,17 +339,9 @@ class TruncatedTemporalKatz(TemporalKatz):
         n_nodes: int,
         k: int = 5,
         path: str = "auto",
-        scan_partitions: int | None = None,
-        presorted: bool = False,
     ):
         self.k = k
-        super().__init__(
-            params,
-            n_nodes,
-            path=path,
-            scan_partitions=scan_partitions,
-            presorted=presorted,
-        )
+        super().__init__(params, n_nodes, path=path)
 
     def reset(self) -> None:
         self.ranks = np.zeros((self.p, self.k * self.n), dtype=np.float64)
@@ -723,14 +412,6 @@ class TruncatedTemporalKatz(TemporalKatz):
         )
         self.last = result["last"].to_numpy(dtype=np.float64).copy()
 
-    def _superstep_scan(self, window: DataFrame, hi: float) -> None:
-        self.run_batch(window, [(0, hi, hi)], readouts=False)
-
-    def can_batch(self) -> bool:
-        if self.path == "walk":
-            return True
-        return self.path == "scan" and self.k * self.n <= 256
-
     # walk-state hooks: (p, k*n) layer-blocked state <-> (k*p, n) rows
     @property
     def _walk_layers(self) -> int:
@@ -748,11 +429,6 @@ class TruncatedTemporalKatz(TemporalKatz):
         per = vals.T.reshape(self.k, self.p, len(nodes)).transpose(1, 0, 2)
         self.ranks.reshape(self.p, self.k, self.n)[:, :, nodes] = per
 
-    def _batch_closures(self):
-        return _affine_closures_ttk(
-            self.n, self.p, self.k, [float(b) for b in self.betas], self.weighters
-        )
-
     def readout(self, boundary: float) -> pd.DataFrame:
         active = ~np.isnan(self.last)
         idx = np.nonzero(active)[0]
@@ -762,7 +438,7 @@ class TruncatedTemporalKatz(TemporalKatz):
         for layer in range(self.k):
             for j in range(self.p):
                 pid = pids[layer * self.p + j]
-                if self.path in ("scan", "walk"):
+                if self.path == "walk":
                     base = self.basis if self.basis is not None else boundary
                     scores = ranks[j, layer, idx] * self.weighters[j].weight(
                         boundary - base

@@ -30,17 +30,13 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.weights import Weighter
-from .walk import decay_rate, plan_decay_chunks, run_walk_batch_distributed
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("node", T.LongType(), False),
-        T.StructField("closure", T.LongType(), False),
-        T.StructField("vals", T.ArrayType(T.DoubleType()), False),
-    ]
+from .walk import (
+    decay_rate,
+    plan_decay_chunks,
+    raise_if_diverged,
+    run_walk_batch_distributed,
 )
 
 
@@ -88,7 +84,6 @@ class DistributedTemporalKatz:
         self,
         params: list[tuple[float, Weighter]],
         closure_col: str = "closure",
-        closure_partitions: int | None = None,
         tol: float = 1e-12,
         block_size: int = 8192,
     ):
@@ -101,7 +96,6 @@ class DistributedTemporalKatz:
         self.p = len(params)
         self._lambda_max = max(decay_rate(w) for w in self.weighters)
         self.closure_col = closure_col
-        self.closure_partitions = closure_partitions
         self.tol = tol
         self.block_size = block_size
         self.walk_metrics: list[dict] = []
@@ -152,7 +146,6 @@ class DistributedTemporalKatz:
             closure_col=self.closure_col,
             state_in=self.state,
             state_basis=self.basis,
-            closure_partitions=self.closure_partitions,
             tol=self.tol,
             block_size=self.block_size,
             layers=self._layers,
@@ -167,12 +160,7 @@ class DistributedTemporalKatz:
             dict(chunk_end=float(chunk_plan[-1][0]), chunks=len(chunk_plan), **m)
             for m in metrics_extractor(out)
         ]
-        diverged = [m for m in self.walk_metrics if m["diverged"]]
-        if diverged:
-            raise ValueError(
-                "temporal-walk scores overflowed float64 (unbounded dynamics "
-                f"for these (beta, weighter) params): {diverged[:3]}"
-            )
+        raise_if_diverged(self.walk_metrics)
         self.state = (
             out.filter(F.col("kind") == 1)
             .select("node", "closure", "vals")

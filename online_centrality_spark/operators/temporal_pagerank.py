@@ -11,9 +11,9 @@ reference: with active-mass vector m,
 (self-loop u == v collapses by the reference's tuple-assignment order:
 the pr(u) add is overwritten, and the mass beta-scale is overwritten).
 The rule has no time decay, so it is a pure affine recurrence over the
-stacked state (pr, m) — the same segment-summary parallel scan as
-TemporalKatz applies for every parameterization: window edge segments are
-summarized as (M, c) in parallel and composed in ``seq`` order.
+stacked state (pr, m), served for every parameterization by an affine
+segment scan: window edge segments are summarized as (M, c) in parallel
+and composed in ``seq`` order.
 
 Export keeps positive scores only (``temporal_pagerank.py:61-62``).
 
@@ -39,7 +39,99 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .temporal_katz import _run_scan_batch  # shared segment plumbing
+_BATCH_SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField("wid", T.IntegerType(), False),  # window index in batch
+        T.StructField("k", T.LongType(), False),
+        T.StructField("m", T.BinaryType(), False),
+        T.StructField("c", T.BinaryType(), False),
+    ]
+)
+
+
+def _run_scan_batch(df, his, init_state, apply_edges, finalize=None):
+    """Superstep batching: ONE Spark job summarizes B windows at once.
+
+    Each seq-contiguous partition splits its (key-monotone) rows at the
+    window boundaries ``his`` (window w covers ``his[w-1] < key <=
+    his[w]``) and builds an independent affine summary per window it
+    touches. The driver then replays the per-window combines — so a
+    457-snapshot replay needs ~457/B jobs instead of 457, amortizing task
+    scheduling and the Python-runner setup that otherwise dominate small
+    windows.
+    """
+    his_arr = np.asarray([float(h) for h in his])
+
+    def kernel(batches):
+        states: dict[int, dict] = {}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            key = pdf["key"].to_numpy(np.float64)
+            wids = np.searchsorted(his_arr, key, side="left")
+            change = np.nonzero(np.diff(wids))[0] + 1
+            starts = np.concatenate([[0], change])
+            ends = np.concatenate([change, [len(wids)]])
+            for s, e in zip(starts, ends):
+                wid = int(wids[s])
+                st = states.get(wid)
+                if st is None:
+                    st = init_state()
+                    st["first_seq"] = int(pdf["seq"].iloc[s])
+                    states[wid] = st
+                sl = pdf.iloc[s:e]
+                apply_edges(
+                    st,
+                    float(his_arr[wid]),
+                    key[s:e],
+                    sl["src"].tolist(),
+                    sl["dst"].tolist(),
+                )
+        rows = []
+        for wid, st in states.items():
+            if finalize is not None:
+                m_bytes, c_bytes = finalize(st)
+            else:
+                m_bytes = np.asarray(st["m"], np.float64).tobytes()
+                c_bytes = np.asarray(st["c"], np.float64).tobytes()
+            rows.append((wid, st["first_seq"], m_bytes, c_bytes))
+        if rows:
+            yield pd.DataFrame(rows, columns=["wid", "k", "m", "c"])
+
+    rows = (
+        df.select("key", "src", "dst", "seq")
+        .repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, "seq")
+        .sortWithinPartitions("seq")
+        .mapInPandas(kernel, schema=_BATCH_SUMMARY_SCHEMA)
+        .collect()
+    )
+    by_w: dict[int, list] = {}
+    for r in rows:
+        by_w.setdefault(r["wid"], []).append(r)
+    for w in by_w:
+        by_w[w].sort(key=lambda r: r["k"])
+    return by_w
+
+
+def _np2d_identity(rows: int, p: int) -> np.ndarray:
+    """(rows, p*rows) block layout: per-param identity blocks side by side."""
+    m2 = np.zeros((rows, p * rows), dtype=np.float64)
+    eye = np.eye(rows)
+    for j in range(p):
+        m2[:, j * rows : (j + 1) * rows] = eye
+    return m2
+
+
+def _np2d_finalize(rows: int, p: int):
+    def finalize(st):
+        m = st["m"].reshape(rows, p, rows).transpose(1, 0, 2)
+        c = st["c"].T
+        return (
+            np.ascontiguousarray(m).tobytes(),
+            np.ascontiguousarray(c).tobytes(),
+        )
+
+    return finalize
 
 
 class TemporalPageRank:
@@ -50,8 +142,6 @@ class TemporalPageRank:
         params: list[tuple[float, float]],
         n_nodes: int,
         path: str = "scan",
-        scan_partitions: int | None = None,
-        presorted: bool = False,
     ):
         for alpha, beta in params:
             if not (0 < alpha < 1):
@@ -62,8 +152,6 @@ class TemporalPageRank:
         self.n = n_nodes
         self.p = len(params)
         self.path = path
-        self.scan_partitions = scan_partitions
-        self.presorted = presorted
         self.reset()
 
     def reset(self) -> None:
@@ -164,8 +252,6 @@ class TemporalPageRank:
 
             return init_state, apply_edges, d, None
 
-        from .temporal_katz import _np2d_finalize, _np2d_identity
-
         a_arr = np.asarray(alphas)
         bt_arr = np.asarray(betas)
         one_a = 1.0 - a_arr
@@ -209,20 +295,13 @@ class TemporalPageRank:
         readouts: bool = True,
     ) -> dict[int, pd.DataFrame]:
         init_state, apply_edges, d, finalize = self._batch_closures()
-        nparts = (
-            self.scan_partitions
-            or df.sparkSession.sparkContext.defaultParallelism
-        )
         if "key" not in df.columns:
             df = df.withColumn("key", F.lit(0.0))
         by_w = _run_scan_batch(
             df,
             [hi for _, hi, _ in intervals],
-            nparts,
-            self.presorted,
             init_state,
             apply_edges,
-            False,
             finalize=finalize,
         )
         p = self.p

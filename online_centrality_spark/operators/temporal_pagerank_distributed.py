@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .walk import DIST_ROW_SCHEMA
+from .walk import DIST_ROW_SCHEMA, decode_walk_meta
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -267,21 +267,10 @@ def run_tpr_batch_distributed(
     )
 
     def metrics_extractor(out_df):
-        mets = []
-        for row in out_df.filter(F.col("kind") == 2).collect():
-            v = np.frombuffer(row["meta"], np.float64)
-            mets.append(
-                dict(
-                    partition=int(v[0]),
-                    rounds=float(v[1]),
-                    residual=float(v[2]),
-                    edges=int(v[3]),
-                    diverged=bool(v[4]),
-                    t_input=float(v[5]),
-                    t_compute=float(v[6]),
-                )
-            )
-        return mets
+        return [
+            decode_walk_meta(row["meta"])
+            for row in out_df.filter(F.col("kind") == 2).collect()
+        ]
 
     return out, metrics_extractor
 

@@ -1,11 +1,12 @@
 """Distributed temporal-walk (Jacobi path-length) kernel for Temporal Katz.
 
-The third execution path (besides ``fold`` and ``scan`` in
-``temporal_katz.py``), designed for **large node spaces and long windows**
-where the affine-scan path is unusable: its transfer matrices are dense
-``n x n`` *and* their entries grow like ``(1 + beta * chain_density)^E``
-within a window, overflowing float64 on busy windows regardless of how
-bounded the true scores are.
+The scale execution path of ``temporal_katz.py`` (its only other path,
+``fold``, is the exact single-task oracle for every weighter), built for
+**large node spaces and long windows**.  An affine segment scan would
+need dense ``n x n`` transfer matrices whose entries grow like ``(1 +
+beta * chain_density)^E`` within a window, overflowing float64 on busy
+windows regardless of how bounded the true scores are; the walk
+iteration below stays numerically stable.
 
 Semantics (identical to the reference computer,
 ``temporal_katz_computer.py:43-51``): per edge ``(u, v, t)`` in stable
@@ -55,9 +56,11 @@ is the kernel's answer to the north rule's hub-skew clause.
 from __future__ import annotations
 
 import math
+import time
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -260,6 +263,212 @@ def walk_totals(
     return total, r, resid, diverged
 
 
+def _time_order(key, seq, src, dst):
+    """Edges in the reference's stable ``(key, seq)`` order.
+
+    Skips the sort only for input already sorted by ``(key, seq)``: a
+    key-monotone check alone would miss seq disorder at timestamp ties,
+    silently applying tied chained edges out of order.
+    """
+    dk = np.diff(key)
+    if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
+        order = np.lexsort((seq, key))
+        return key[order], src[order], dst[order]
+    return key, src, dst
+
+
+def _advance_blocks(
+    key: np.ndarray,
+    src: np.ndarray,
+    dst: np.ndarray,
+    y0loc: np.ndarray,
+    y0_active: np.ndarray,
+    chunk_plan: list[tuple[float, list[tuple[int, float, float]]]],
+    betas: np.ndarray,
+    weighters: list[Weighter],
+    tol: float,
+    block_size: int,
+    layers: int,
+    emit,
+):
+    """Advance one chain-closed edge group over the whole batch.
+
+    ``key``/``src``/``dst`` are the group's edges in ``(key, seq)`` order
+    with task-local node indices; ``y0loc`` ``(nl, layers * p)`` is the
+    carried state in the basis of the first chunk end and is rebased IN
+    PLACE chunk by chunk, so on return it is in the last chunk's basis.
+    ``emit(iid, mask, scores)`` receives each read-out: the local node
+    mask and the ``(m, layers * p)`` scores decayed to the read-out time.
+
+    Blocked execution: rounds stream over cache-resident edge blocks
+    instead of the whole task (which hits the DRAM-bandwidth wall at high
+    core counts). Exact because temporal walks never go backward in time:
+    blocks are processed in time order and a per-node CARRY of
+    fully-converged earlier-block totals feeds each block's round-1
+    injection. Read-out boundaries are block cuts, so the carry at a cut
+    IS the read-out accumulator.
+
+    Returns ``(carry, touched, rounds_sum, edges_sum, resid_max,
+    diverged)``; the group's end state is ``carry + y0loc``.
+    """
+    p = len(betas)
+    p_rows = layers * p
+    nl = len(y0loc)
+    carry = np.zeros((nl, p_rows))
+    touched = np.zeros(nl, dtype=bool)
+    rounds_sum = edges_sum = 0
+    resid_max = 0.0
+    diverged_any = False
+    basis = chunk_plan[0][0]
+    pos_lo = 0
+    for t_end, ivs in chunk_plan:
+        t_end = float(t_end)
+        if t_end != basis:
+            # local rebase to the new chunk basis (lazy decay carry)
+            for r in range(p_rows):
+                fac = weighters[r % p].weight(t_end - basis)
+                carry[:, r] *= fac
+                y0loc[:, r] *= fac
+            basis = t_end
+        hi_cut = int(np.searchsorted(key, t_end, side="right"))
+        iv_cuts = [
+            int(np.searchsorted(key, float(hi), side="right"))
+            for _, hi, _ in ivs
+        ]
+        block_starts = sorted(
+            set(range(pos_lo, hi_cut, block_size))
+            | set(iv_cuts)
+            | {pos_lo, hi_cut}
+        )
+        iv_ptr = 0
+
+        def emit_readouts_upto(pos):
+            # every boundary cut is a block cut, so equality hits
+            nonlocal iv_ptr
+            while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
+                iid, hi, rt = ivs[iv_ptr]
+                mask = touched | y0_active
+                if mask.any():
+                    scores = carry[mask] + y0loc[mask]  # basis t_end
+                    for r in range(p_rows):
+                        scores[:, r] /= weighters[r % p].weight(
+                            t_end - float(rt)
+                        )
+                    emit(iid, mask, scores)
+                iv_ptr += 1
+
+        emit_readouts_upto(pos_lo)
+        for s, e in zip(block_starts[:-1], block_starts[1:]):
+            if e > s:
+                bsrc = src[s:e]
+                bdst = dst[s:e]
+                B = e - s
+                edge_flat, pred_flat, views, flat_size = (
+                    build_walk_layout(bsrc, bdst)
+                )
+                base_in = y0loc + carry  # (nl, p_rows)
+                if layers == 1:
+                    w_inject = np.empty((p, B))
+                    for j in range(p):
+                        w_inject[j] = betas[j] * (
+                            base_in[bsrc, j]
+                            + weighters[j].weight_np(t_end - key[s:e])
+                        )
+                    totals, rounds, resid, diverged = walk_totals(
+                        w_inject, betas, edge_flat, pred_flat, views,
+                        flat_size, tol=tol,
+                    )
+                else:
+                    # truncated: layer l reads only layer l-1 ->
+                    # exactly `layers` prefix passes, no iteration
+                    totals = np.empty((p_rows, B))
+                    FB = np.zeros(flat_size + 1)
+                    for j in range(p):
+                        wv = weighters[j].weight_np(t_end - key[s:e])
+                        totals[j] = betas[j] * wv
+                        for l in range(1, layers):
+                            prev = totals[(l - 1) * p + j]
+                            FB.fill(0.0)
+                            FB[edge_flat] = prev
+                            for off, rws, width in views:
+                                if width == 1:
+                                    continue
+                                view = FB[off : off + rws * width].reshape(
+                                    rws, width
+                                )
+                                np.cumsum(view, axis=1, out=view)
+                            totals[l * p + j] = betas[j] * (
+                                wv
+                                + base_in[bsrc, (l - 1) * p + j]
+                                + FB[pred_flat]
+                            )
+                    # layered path has no per-round isfinite check:
+                    # verify the block's totals so an overflowing
+                    # parameterization raises like the iterative path
+                    rounds, resid = layers, 0.0
+                    diverged = not np.isfinite(totals).all()
+                np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
+                touched[bsrc] = True
+                touched[bdst] = True
+                rounds_sum += rounds * B
+                edges_sum += B
+                resid_max = max(resid_max, resid)
+                diverged_any = diverged_any or diverged
+            emit_readouts_upto(e)
+        pos_lo = hi_cut
+    return carry, touched, rounds_sum, edges_sum, resid_max, diverged_any
+
+
+def _encode_meta(
+    edges: int,
+    rounds_sum: int,
+    edges_sum: int,
+    resid_max: float,
+    diverged: bool,
+    t_k0: float,
+    t_k1: float,
+) -> bytes:
+    """Pack one kernel call's metrics as 7 float64s (see
+    :func:`decode_walk_meta`); ``t_k0``/``t_k1`` mark the call's start and
+    the end of its input decoding."""
+    tc = TaskContext.get()
+    return np.array(
+        [
+            float(tc.partitionId() if tc is not None else -1),
+            rounds_sum / edges_sum if edges_sum else 0.0,
+            resid_max,
+            float(edges),
+            1.0 if diverged else 0.0,
+            t_k1 - t_k0,
+            time.time() - t_k1,
+        ]
+    ).tobytes()
+
+
+def decode_walk_meta(buf: bytes) -> dict:
+    """One kernel call's metrics row: partition, mean rounds per edge,
+    max residual, edges, diverged flag, input and compute seconds."""
+    v = np.frombuffer(buf, np.float64)
+    return dict(
+        partition=int(v[0]),
+        rounds=float(v[1]),
+        residual=float(v[2]),
+        edges=int(v[3]),
+        diverged=bool(v[4]),
+        t_input=float(v[5]),
+        t_compute=float(v[6]),
+    )
+
+
+def raise_if_diverged(metrics: list[dict]) -> None:
+    diverged = [m for m in metrics if m["diverged"]]
+    if diverged:
+        raise ValueError(
+            "temporal-walk scores overflowed float64 (unbounded dynamics "
+            f"for these (beta, weighter) params): {diverged[:3]}"
+        )
+
+
 def make_walk_kernel(
     betas: np.ndarray,
     weighters: list[Weighter],
@@ -298,15 +507,9 @@ def make_walk_kernel(
     bytes and the (m, rows) score matrix as float64 bytes — collected
     via Arrow and decoded with ``np.frombuffer`` on the driver.
     """
-    p = len(betas)
-    p_rows = layers * p
 
     def kernel(batches):
-        import time as _t
-
-        from pyspark import TaskContext
-
-        t_k0 = _t.time()
+        t_k0 = time.time()
         pdfs = [b for b in batches if len(b)]
         if not pdfs:
             return
@@ -329,16 +532,7 @@ def make_walk_kernel(
                 gdst = gdst[keep]
         if len(key) == 0:
             return
-        # skip the sort only for input already sorted by (key, seq): a
-        # key-monotone check alone would miss seq disorder at timestamp
-        # ties, silently applying tied chained edges out of the
-        # reference's stable seq order
-        dk = np.diff(key)
-        if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
-            order = np.lexsort((seq, key))
-            key = key[order]
-            gsrc = gsrc[order]
-            gdst = gdst[order]
+        key, gsrc, gdst = _time_order(key, seq, gsrc, gdst)
         E = len(key)
         # local node encoding: dense range slice when the task's node ids
         # are packed (the common chain-closed layout), else sort-unique
@@ -357,146 +551,34 @@ def make_walk_kernel(
         ever[src] = True
         ever[dst] = True
         y0loc = np.ascontiguousarray(y0_bcast.value[:, nodes].T)  # (nl, p_rows)
+        # y0-active nodes with no edge in the batch are the driver's to
+        # fill: they are in neither the read-outs nor the end-state
         y0_active = active_bcast.value[nodes] & ever
-        # Blocked execution: rounds stream over cache-resident edge blocks
-        # instead of the whole task (which hits the DRAM-bandwidth wall at
-        # high core counts). Exact because temporal walks never go
-        # backward in time: blocks are processed in time order and a
-        # per-node CARRY of fully-converged earlier-block totals feeds
-        # each block's round-1 injection. Read-out boundaries are block
-        # cuts, so the carry at a cut IS the read-out accumulator.
-        carry = np.zeros((nl, p_rows))
-        touched = np.zeros(nl, dtype=bool)
         rows = []
-        rounds_sum = edges_sum = 0
-        resid_max = 0.0
-        diverged_any = False
-        basis = chunk_plan[0][0]
-        pos_lo = 0
-        t_k1 = _t.time()
-        for t_end, ivs in chunk_plan:
-            t_end = float(t_end)
-            if t_end != basis:
-                # local rebase to the new chunk basis (lazy decay carry)
-                for r in range(p_rows):
-                    fac = weighters[r % p].weight(t_end - basis)
-                    carry[:, r] *= fac
-                    y0loc[:, r] *= fac
-                basis = t_end
-            hi_cut = int(np.searchsorted(key, t_end, side="right"))
-            iv_cuts = [
-                int(np.searchsorted(key, float(hi), side="right"))
-                for _, hi, _ in ivs
-            ]
-            block_starts = sorted(
-                set(range(pos_lo, hi_cut, block_size))
-                | set(iv_cuts)
-                | {pos_lo, hi_cut}
+
+        def emit(iid, mask, scores):
+            rows.append(
+                (
+                    0,
+                    iid,
+                    nodes[mask].tobytes(),
+                    np.ascontiguousarray(scores).tobytes(),
+                )
             )
-            iv_ptr = 0
 
-            def emit_readouts_upto(pos):
-                # every boundary cut is a block cut, so equality hits
-                nonlocal iv_ptr
-                while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
-                    iid, hi, rt = ivs[iv_ptr]
-                    # y0-active nodes with no edge in the batch are the
-                    # driver's to fill (they are NOT in the end-state)
-                    mask = touched | y0_active
-                    if mask.any():
-                        scores = carry[mask] + y0loc[mask]  # basis t_end
-                        for r in range(p_rows):
-                            scores[:, r] /= weighters[r % p].weight(
-                                t_end - float(rt)
-                            )
-                        rows.append(
-                            (
-                                0,
-                                iid,
-                                nodes[mask].tobytes(),
-                                np.ascontiguousarray(scores).tobytes(),
-                            )
-                        )
-                    iv_ptr += 1
-
-            emit_readouts_upto(pos_lo)
-            for s, e in zip(block_starts[:-1], block_starts[1:]):
-                if e > s:
-                    bsrc = src[s:e]
-                    bdst = dst[s:e]
-                    B = e - s
-                    edge_flat, pred_flat, views, flat_size = (
-                        build_walk_layout(bsrc, bdst)
-                    )
-                    base_in = y0loc + carry  # (nl, p_rows)
-                    if layers == 1:
-                        w_inject = np.empty((p, B))
-                        for j in range(p):
-                            w_inject[j] = betas[j] * (
-                                base_in[bsrc, j]
-                                + weighters[j].weight_np(t_end - key[s:e])
-                            )
-                        totals, rounds, resid, diverged = walk_totals(
-                            w_inject, betas, edge_flat, pred_flat, views,
-                            flat_size, tol=tol,
-                        )
-                    else:
-                        # truncated: layer l reads only layer l-1 ->
-                        # exactly `layers` prefix passes, no iteration
-                        totals = np.empty((p_rows, B))
-                        FB = np.zeros(flat_size + 1)
-                        for j in range(p):
-                            wv = weighters[j].weight_np(t_end - key[s:e])
-                            totals[j] = betas[j] * wv
-                            for l in range(1, layers):
-                                prev = totals[(l - 1) * p + j]
-                                FB.fill(0.0)
-                                FB[edge_flat] = prev
-                                for off, rws, width in views:
-                                    if width == 1:
-                                        continue
-                                    view = FB[off : off + rws * width].reshape(
-                                        rws, width
-                                    )
-                                    np.cumsum(view, axis=1, out=view)
-                                totals[l * p + j] = betas[j] * (
-                                    wv
-                                    + base_in[bsrc, (l - 1) * p + j]
-                                    + FB[pred_flat]
-                                )
-                        # layered path has no per-round isfinite check:
-                        # verify the block's totals so an overflowing
-                        # parameterization raises like the iterative path
-                        rounds, resid = layers, 0.0
-                        diverged = not np.isfinite(totals).all()
-                    np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
-                    touched[bsrc] = True
-                    touched[bdst] = True
-                    rounds_sum += rounds * B
-                    edges_sum += B
-                    resid_max = max(resid_max, resid)
-                    diverged_any = diverged_any or diverged
-                emit_readouts_upto(e)
-            pos_lo = hi_cut
+        t_k1 = time.time()
+        carry, _, rounds_sum, edges_sum, resid_max, diverged = _advance_blocks(
+            key, src, dst, y0loc, y0_active, chunk_plan, betas, weighters,
+            tol, block_size, layers, emit,
+        )
         y_end = carry[ever] + y0loc[ever]  # (nl, p), basis = last chunk end
         rows.append(
             (1, -1, nodes[ever].tobytes(), np.ascontiguousarray(y_end).tobytes())
         )
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        mean_rounds = rounds_sum / edges_sum if edges_sum else 0.0
-        meta = np.array(
-            [
-                float(pid),
-                mean_rounds,
-                resid_max,
-                float(E),
-                1.0 if diverged_any else 0.0,
-                t_k1 - t_k0,
-                _t.time() - t_k1,
-            ]
+        meta = _encode_meta(
+            E, rounds_sum, edges_sum, resid_max, diverged, t_k0, t_k1
         )
-        rows.append((2, -1, b"", meta.tobytes()))
+        rows.append((2, -1, b"", meta))
         yield pd.DataFrame(rows, columns=["kind", "interval", "nodes", "vals"])
 
     return kernel
@@ -543,6 +625,7 @@ def run_walk_batch(
         cond = F.col("key") <= F.lit(t_last)
         if lo is not None:
             cond = cond & (F.col("key") > F.lit(float(lo)))
+        nparts = closure_partitions or sc.defaultParallelism
         if closure_col is None:
             # no chain-closure key: exact only as a single ordered task
             sel = df.select("key", "src", "dst", "seq").filter(cond).coalesce(1)
@@ -551,26 +634,14 @@ def run_walk_batch(
             sel = df.select("key", "src", "dst", "seq").filter(cond)
         elif closure_col == "components":
             # derive the closure key: weakly connected components of the
-            # time-collapsed graph (walks cannot leave a WCC), computed
-            # with the engine's own CC operator — zero-config exact
-            # distribution for multi-component graphs
-            from .components import connected_components
+            # time-collapsed graph (walks cannot leave a WCC) — zero-config
+            # exact distribution for multi-component graphs
+            from .temporal_katz_distributed import attach_closure_components
 
-            base = df.filter(cond)
-            cc = connected_components(base.select("src", "dst"))
-            nparts = closure_partitions or sc.defaultParallelism
-            sel = (
-                base.join(
-                    cc.withColumnRenamed("node_id", "src").withColumnRenamed(
-                        "component", "_closure"
-                    ),
-                    "src",
-                )
-                .repartition(nparts, "_closure")
-                .select("key", "src", "dst", "seq")
-            )
+            sel = attach_closure_components(
+                df.filter(cond), partitions=nparts
+            ).select("key", "src", "dst", "seq")
         else:
-            nparts = closure_partitions or sc.defaultParallelism
             sel = (
                 df.filter(cond)
                 .repartition(nparts, closure_col)
@@ -609,24 +680,8 @@ def run_walk_batch(
             es_nodes.append(np.frombuffer(nb, np.int64))
             es_vals.append(np.frombuffer(vb, np.float64).reshape(-1, p))
         else:
-            v = np.frombuffer(vb, np.float64)
-            metrics.append(
-                dict(
-                    partition=int(v[0]),
-                    rounds=float(v[1]),
-                    residual=float(v[2]),
-                    edges=int(v[3]),
-                    diverged=bool(v[4]),
-                    t_input=float(v[5]),
-                    t_rounds=float(v[6]),
-                )
-            )
-    diverged = [m for m in metrics if m["diverged"]]
-    if diverged:
-        raise ValueError(
-            "temporal-walk scores overflowed float64 (unbounded dynamics "
-            f"for these (beta, weighter) params): {diverged[:3]}"
-        )
+            metrics.append(decode_walk_meta(vb))
+    raise_if_diverged(metrics)
     readouts = {
         iid: (np.concatenate(ro_nodes[iid]), np.concatenate(ro_vals[iid]))
         for iid in ro_nodes
@@ -662,7 +717,6 @@ def run_walk_batch_distributed(
     closure_col: str,
     state_in: DataFrame | None = None,
     state_basis: float | None = None,
-    closure_partitions: int | None = None,
     tol: float = 1e-12,
     block_size: int = 8192,
     layers: int = 1,
@@ -674,7 +728,7 @@ def run_walk_batch_distributed(
     State is a DataFrame ``(node, closure, vals: array<double>)`` in the
     basis ``state_basis`` (the previous batch's last chunk end); edges
     carry a node-disjoint ``closure_col``. The two sides meet via
-    ``groupBy(closure).cogroup(...).applyInPandas`` — Spark's native
+    ``groupBy(closure).cogroup(...).applyInArrow`` — Spark's native
     two-sided grouped map, so the state rows reach exactly their group's
     kernel call without widening the edge schema (a nullable state
     column on every edge row makes Arrow->pandas object conversion the
@@ -688,12 +742,8 @@ def run_walk_batch_distributed(
     and split on ``kind`` (0 = read-out ``(interval, node, vals)``,
     1 = next-state ``(node, closure, vals)``);
     ``metrics_extractor(out_df)`` collects the per-group convergence
-    rows (small).
-
-    ``closure_partitions`` is advisory only: the cogroup's task count
-    follows ``spark.sql.shuffle.partitions`` (plus AQE coalescing) —
-    size that to the cluster; the parameter is kept for signature
-    parity with :func:`run_walk_batch`.
+    rows (small).  The cogroup's task count follows
+    ``spark.sql.shuffle.partitions`` (plus AQE coalescing).
     """
     spark = edges.sparkSession
     p = len(betas)
@@ -726,13 +776,9 @@ def run_walk_batch_distributed(
         # applyInArrow kernel: pyarrow Tables in and out — no pandas
         # DataFrame materialization on either side (the row count here
         # is the whole edge stream)
-        import time as _t
-
         import pyarrow as pa
 
-        from pyspark import TaskContext
-
-        t_k0 = _t.time()
+        t_k0 = time.time()
         closure_val = int(key_tuple[0].as_py() if hasattr(key_tuple[0], "as_py") else key_tuple[0])
         E0 = etbl.num_rows
 
@@ -743,15 +789,7 @@ def run_walk_batch_distributed(
         seq = col(etbl, "seq", np.int64) if E0 else np.empty(0, np.int64)
         gsrc = col(etbl, "src", np.int64) if E0 else np.empty(0, np.int64)
         gdst = col(etbl, "dst", np.int64) if E0 else np.empty(0, np.int64)
-        if len(key):
-            dk = np.diff(key)
-            # lexicographic (key, seq) disorder check — see the note in
-            # make_walk_kernel: key-only misses seq disorder at ties
-            if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
-                order = np.lexsort((seq, key))
-                key = key[order]
-                gsrc = gsrc[order]
-                gdst = gdst[order]
+        key, gsrc, gdst = _time_order(key, seq, gsrc, gdst)
         E = len(key)
         n_state = stbl.num_rows
         snodes = (
@@ -793,9 +831,7 @@ def run_walk_batch_distributed(
         if sb != basis:
             for r in range(p_rows):
                 y0loc[:, r] *= weighters[r % p].weight(basis - sb)
-        carry = np.zeros((nl, p_rows))
-        touched = np.zeros(nl, dtype=bool)
-        # columnar accumulators -> ONE DataFrame per group at the end
+        # columnar accumulators -> ONE table per group at the end
         # (per-row tuples and per-emit frames both dominated the kernel
         # at many groups x many read-out boundaries)
         acc_kind: list[np.ndarray] = []
@@ -810,119 +846,20 @@ def run_walk_batch_distributed(
             acc_node.append(out_nodes)
             acc_vals.append(np.ascontiguousarray(out_scores))
 
-        rounds_sum = edges_sum = 0
-        resid_max = 0.0
-        diverged_any = False
-        pos_lo = 0
-        t_k1 = _t.time()
-        for t_end, ivs in chunk_plan:
-            t_end = float(t_end)
-            if t_end != basis:
-                for r in range(p_rows):
-                    fac = weighters[r % p].weight(t_end - basis)
-                    carry[:, r] *= fac
-                    y0loc[:, r] *= fac
-                basis = t_end
-            hi_cut = int(np.searchsorted(key, t_end, side="right")) if E else 0
-            iv_cuts = [
-                int(np.searchsorted(key, float(hi), side="right")) if E else 0
-                for _, hi, _ in ivs
-            ]
-            block_starts = sorted(
-                set(range(pos_lo, hi_cut, block_size))
-                | set(iv_cuts)
-                | {pos_lo, hi_cut}
+        t_k1 = time.time()
+        carry, touched, rounds_sum, edges_sum, resid_max, diverged = (
+            _advance_blocks(
+                key, src, dst, y0loc, y0_active, chunk_plan, betas, weighters,
+                tol, block_size, layers,
+                lambda iid, mask, scores: emit_frame(0, iid, nodes[mask], scores),
             )
-            iv_ptr = 0
-
-            def emit_readouts_upto(pos):
-                nonlocal iv_ptr
-                while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
-                    iid, hi, rt = ivs[iv_ptr]
-                    mask = touched | y0_active
-                    if mask.any():
-                        scores = carry[mask] + y0loc[mask]
-                        for r in range(p_rows):
-                            scores[:, r] /= weighters[r % p].weight(
-                                t_end - float(rt)
-                            )
-                        emit_frame(0, iid, nodes[mask], scores)
-                    iv_ptr += 1
-
-            emit_readouts_upto(pos_lo)
-            for s, en in zip(block_starts[:-1], block_starts[1:]):
-                if en > s:
-                    bsrc = src[s:en]
-                    bdst = dst[s:en]
-                    B = en - s
-                    edge_flat, pred_flat, views, flat_size = (
-                        build_walk_layout(bsrc, bdst)
-                    )
-                    base_in = y0loc + carry
-                    if layers == 1:
-                        w_inject = np.empty((p, B))
-                        for j in range(p):
-                            w_inject[j] = betas[j] * (
-                                base_in[bsrc, j]
-                                + weighters[j].weight_np(t_end - key[s:en])
-                            )
-                        totals, rounds, resid, diverged = walk_totals(
-                            w_inject, betas, edge_flat, pred_flat, views,
-                            flat_size, tol=tol,
-                        )
-                    else:
-                        totals = np.empty((p_rows, B))
-                        FB = np.zeros(flat_size + 1)
-                        for j in range(p):
-                            wv = weighters[j].weight_np(t_end - key[s:en])
-                            totals[j] = betas[j] * wv
-                            for l in range(1, layers):
-                                prev = totals[(l - 1) * p + j]
-                                FB.fill(0.0)
-                                FB[edge_flat] = prev
-                                for off, rws, width in views:
-                                    if width == 1:
-                                        continue
-                                    view = FB[
-                                        off : off + rws * width
-                                    ].reshape(rws, width)
-                                    np.cumsum(view, axis=1, out=view)
-                                totals[l * p + j] = betas[j] * (
-                                    wv
-                                    + base_in[bsrc, (l - 1) * p + j]
-                                    + FB[pred_flat]
-                                )
-                        # layered path has no per-round isfinite check:
-                        # verify the block's totals so an overflowing
-                        # parameterization raises like the iterative path
-                        rounds, resid = layers, 0.0
-                        diverged = not np.isfinite(totals).all()
-                    np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
-                    touched[bsrc] = True
-                    touched[bdst] = True
-                    rounds_sum += rounds * B
-                    edges_sum += B
-                    resid_max = max(resid_max, resid)
-                    diverged_any = diverged_any or diverged
-                emit_readouts_upto(en)
-            pos_lo = hi_cut
+        )
         out_mask = touched | y0_active
         y_end = carry[out_mask] + y0loc[out_mask]
         if out_mask.any():
             emit_frame(1, -1, nodes[out_mask], y_end)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        mean_rounds = rounds_sum / edges_sum if edges_sum else 0.0
-        meta = np.array(
-            [
-                float(pid),
-                mean_rounds,
-                resid_max,
-                float(E),
-                1.0 if diverged_any else 0.0,
-                t_k1 - t_k0,
-                _t.time() - t_k1,
-            ]
+        meta = _encode_meta(
+            E, rounds_sum, edges_sum, resid_max, diverged, t_k0, t_k1
         )
         if acc_kind:
             kind_col = np.concatenate(acc_kind)
@@ -961,7 +898,7 @@ def run_walk_batch_distributed(
                     np.full(m + 1, closure_val, np.int64), pa.int64()
                 ),
                 "vals": vals_arr,
-                "meta": pa.array([None] * m + [meta.tobytes()], pa.binary()),
+                "meta": pa.array([None] * m + [meta], pa.binary()),
             }
         )
 
@@ -972,20 +909,9 @@ def run_walk_batch_distributed(
     )
 
     def metrics_extractor(out_df):
-        mets = []
-        for row in out_df.filter(F.col("kind") == 2).collect():
-            v = np.frombuffer(row["meta"], np.float64)
-            mets.append(
-                dict(
-                    partition=int(v[0]),
-                    rounds=float(v[1]),
-                    residual=float(v[2]),
-                    edges=int(v[3]),
-                    diverged=bool(v[4]),
-                    t_input=float(v[5]) if len(v) > 5 else 0.0,
-                    t_compute=float(v[6]) if len(v) > 6 else 0.0,
-                )
-            )
-        return mets
+        return [
+            decode_walk_meta(row["meta"])
+            for row in out_df.filter(F.col("kind") == 2).collect()
+        ]
 
     return out, metrics_extractor

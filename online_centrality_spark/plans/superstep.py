@@ -127,8 +127,9 @@ class SuperstepDriver:
         static_distributed: bool = False,
     ) -> list[SnapshotInterval]:
         """``batch_size`` > 1 groups consecutive snapshot intervals so
-        scan-path temporal measures advance B windows with one Spark job
-        (``run_batch``); read-outs per boundary stay driver-side. Other
+        batchable temporal measures (``can_batch()``: walk-path Temporal
+        Katz, scan-path Temporal PageRank) advance B windows with one
+        Spark job (``run_batch``); read-outs per boundary stay driver-side. Other
         measures run one superstep per interval as usual.
 
         ``persist_edges=False`` skips caching the bucketed edge frame —

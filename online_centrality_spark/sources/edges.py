@@ -251,7 +251,9 @@ def edges_from_transcripts(transcripts: DataFrame) -> tuple[DataFrame, DataFrame
         session_col="conv_id",
         order_col="turn_idx",
         actor=actor_expr(),
-        t_expr=F.col("ts").cast("long"),
+        # TIMESTAMP or TIMESTAMP_NTZ (pandas-written naive ts); the
+        # session tz is UTC, so both read the same epoch seconds
+        t_expr=F.unix_seconds(F.col("ts").cast("timestamp")),
     )
 
 

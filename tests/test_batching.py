@@ -32,8 +32,8 @@ def test_batched_driver_matches_oracle(spark, tmp_path):
     k = 2
     captured, _ = run_oracle(stream, boundaries, "epoch", EXP_PARAMS, k=k)
 
-    tk = TemporalKatz(EXP_PARAMS, n_nodes, path="scan")
-    ttk = TruncatedTemporalKatz(EXP_PARAMS, n_nodes, k=k, path="scan")
+    tk = TemporalKatz(EXP_PARAMS, n_nodes, path="walk")
+    ttk = TruncatedTemporalKatz(EXP_PARAMS, n_nodes, k=k, path="walk")
     tpr = TemporalPageRank(TPR_PARAMS, n_nodes)
     driver = SuperstepDriver(spark, str(tmp_path / "out_batched"))
     sched = driver.run(
@@ -58,7 +58,8 @@ def test_batched_driver_matches_oracle(spark, tmp_path):
 
 
 def test_numpy2d_kernel_path_matches_oracle(spark, tmp_path):
-    """p >= 5 switches the segment kernels to the in-place numpy layout."""
+    """p >= 5 switches TPR's segment kernel to the in-place numpy layout;
+    TK/TTK run the walk path with the same six params."""
     from online_centrality_spark.functions.weights import ExponentialWeighter
 
     params6 = [
@@ -84,8 +85,8 @@ def test_numpy2d_kernel_path_matches_oracle(spark, tmp_path):
         on_snapshot=lambda i, b: cap_tpr.__setitem__(i, otpr.snapshot()),
     )
 
-    tk = TemporalKatz(params6, n_nodes, path="scan")
-    ttk = TruncatedTemporalKatz(params6, n_nodes, k=2, path="scan")
+    tk = TemporalKatz(params6, n_nodes, path="walk")
+    ttk = TruncatedTemporalKatz(params6, n_nodes, k=2, path="walk")
     tpr = TemporalPageRank(tpr_params5, n_nodes)
     driver = SuperstepDriver(spark, str(tmp_path / "out_np2d"))
     sched = driver.run(

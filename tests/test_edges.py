@@ -134,3 +134,51 @@ def test_conversation_stats(spark, fixture_pair):
         assert r["t_first_us"] == us.min() and r["t_last_us"] == us.max()
         assert r["duration_us"] == us.max() - us.min()
         assert r["n_tool_turns"] == g["tool"].notna().sum()
+
+
+def test_transcript_ts_ntz_matches_timestamp(spark):
+    """A naive ``ts`` (pandas-written parquet reads as TIMESTAMP_NTZ)
+    induces the same edges as a TIMESTAMP ``ts``, including a pre-1970
+    turn with a fractional second (floored to epoch seconds)."""
+    from pyspark.sql import types as T
+
+    tr = pd.DataFrame(
+        {
+            "conv_id": ["c0", "c0", "c0", "c1", "c1"],
+            "turn_idx": pd.array([0, 1, 2, 0, 1], dtype="int32"),
+            "role": ["user", "assistant", "tool", "user", "assistant"],
+            "text": ["a", "b", "c", "d", "e"],
+            "tool": [None, None, "search", None, None],
+            "ts": pd.to_datetime(
+                [
+                    "1969-12-31 23:59:57",
+                    "1969-12-31 23:59:58.5",
+                    "1970-01-01 00:00:03.75",
+                    "2024-05-01 12:00:00",
+                    "2024-05-01 12:00:07.9",
+                ],
+                format="ISO8601",
+            ),
+        }
+    )
+
+    def edges_for(ts_type):
+        schema = T.StructType(
+            [
+                T.StructField("conv_id", T.StringType(), False),
+                T.StructField("turn_idx", T.IntegerType(), False),
+                T.StructField("role", T.StringType(), False),
+                T.StructField("text", T.StringType(), False),
+                T.StructField("tool", T.StringType(), True),
+                T.StructField("ts", ts_type, False),
+            ]
+        )
+        sdf = spark.createDataFrame(tr, schema=schema)
+        assert sdf.schema["ts"].dataType == ts_type
+        edges, _ = edges_from_transcripts(sdf)
+        return edges.orderBy("seq").toPandas()
+
+    tz = edges_for(T.TimestampType())
+    ntz = edges_for(T.TimestampNTZType())
+    pd.testing.assert_frame_equal(tz, ntz)
+    assert tz["t"].tolist() == [-2, 3, 1714564807]

@@ -15,7 +15,7 @@ from online_centrality_spark.sources.transcripts import transcripts_spark
 PARAMS = [(1.0, ExponentialWeighter(norm=3600.0, base=0.5))]
 
 
-def make_measures(spark, n_nodes, tk_path="scan"):
+def make_measures(spark, n_nodes, tk_path):
     return [
         TemporalKatz(PARAMS, n_nodes, path=tk_path),
         TemporalPageRank([(0.85, 0.5)], n_nodes),
@@ -30,7 +30,7 @@ def scores_map(driver):
     }
 
 
-@pytest.mark.parametrize("tk_path", ["scan", "walk"])
+@pytest.mark.parametrize("tk_path", ["walk", "fold"])
 def test_kill_and_resume_identical(spark, tmp_path, tk_path):
     tr = transcripts_spark(spark, n_convs=30, max_turns=10, seed=3)
     edges, nodes = edges_from_transcripts(tr)

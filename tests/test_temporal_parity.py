@@ -99,11 +99,11 @@ def assert_close_maps(got: dict, want: dict, ctx: str, atol=1e-9):
         )
 
 
-@pytest.mark.parametrize("path", ["scan", "fold", "walk"])
+@pytest.mark.parametrize("path", ["fold", "walk"])
 def test_temporal_parity_epoch(spark, edge_data, tmp_path, path):
     edges, stream, n_nodes = edge_data
     boundaries = make_boundaries(stream, delta=1800, count=20)
-    params_tk = EXP_PARAMS if path in ("scan", "walk") else EXP_PARAMS + NONFACT_PARAMS
+    params_tk = EXP_PARAMS if path == "walk" else EXP_PARAMS + NONFACT_PARAMS
     k = 3
 
     captured, _ = run_oracle(stream, boundaries, "epoch", params_tk, k=k)
@@ -148,7 +148,7 @@ def test_temporal_parity_epoch(spark, edge_data, tmp_path, path):
             assert_close_maps(got[(pid, i)], want, f"did {pid} snap {i}")
 
 
-@pytest.mark.parametrize("path", ["scan", "walk"])
+@pytest.mark.parametrize("path", ["walk"])
 def test_temporal_parity_index_mode(spark, edge_data, tmp_path, path):
     edges, stream, n_nodes = edge_data
     boundaries = [50 * (i + 1) for i in range(8)]

@@ -209,15 +209,20 @@ def test_walk_sparse_node_ids_and_self_loops(spark):
     _assert_match(outs, captured, params)
 
 
-def test_walk_distributed_state_matches_driver_state(spark):
+@pytest.mark.parametrize("layers", [1, 3])
+def test_walk_distributed_state_matches_driver_state(spark, layers):
     """Fully distributed-state replay (state co-partitioned DataFrame,
     job-side read-outs, nothing broadcast) over TWO sequential batches
     matches the driver-state engine, including a closure group that goes
     silent in batch 2 (pure-decay carry) and one that first appears
-    there."""
+    there; ``layers=3`` runs the truncated variant on both sides."""
     from pyspark.sql import functions as F
 
+    from online_centrality_spark.operators.temporal_katz import (
+        TruncatedTemporalKatz,
+    )
     from online_centrality_spark.operators.walk import (
+        decay_rate,
         plan_decay_chunks,
         run_walk_batch_distributed,
     )
@@ -253,17 +258,15 @@ def test_walk_distributed_state_matches_driver_state(spark):
 
     # driver-state reference over the concatenated replay
     n = 15
-    tk = TemporalKatz(params, n, path="walk")
+    if layers == 1:
+        tk = TemporalKatz(params, n, path="walk")
+    else:
+        tk = TruncatedTemporalKatz(params, n, k=layers, path="walk")
     all_ivs = [(i, float(b), float(b)) for i, b in enumerate(b1 + b2)]
     full = tk.run_batch(df_of(sorted(s1 + s2)), all_ivs)
 
     # distributed-state: two batches, state handed over as a DataFrame
-    lam = max(
-        __import__(
-            "online_centrality_spark.operators.walk", fromlist=["x"]
-        ).decay_rate(w)
-        for w in ws
-    )
+    lam = max(decay_rate(w) for w in ws)
     state = None
     basis = None
     got = {}
@@ -282,7 +285,7 @@ def test_walk_distributed_state_matches_driver_state(spark):
             closure_col="grp",
             state_in=state,
             state_basis=basis,
-            closure_partitions=4,
+            layers=layers,
         )
         out = out.persist()
         assert not any(m["diverged"] for m in metx(out))
@@ -299,7 +302,7 @@ def test_walk_distributed_state_matches_driver_state(spark):
         for pj, pid in enumerate(tk.param_ids):
             sub = pdf[pdf["param_id"] == pid]
             for nd, sc in zip(sub["node_id"], sub["score"]):
-                want.setdefault((b, nd), np.zeros(len(params)))[pj] = sc
+                want.setdefault((b, nd), np.zeros(len(tk.param_ids)))[pj] = sc
     assert set(got) == set(want)
     for k in want:
         assert np.allclose(got[k], want[k], rtol=1e-9, atol=1e-12), k
