@@ -171,10 +171,7 @@ def scd2_intervals(
         changed = F.lit(False)
         for v in value_cols:
             prev = F.lag(F.col(v)).over(w)
-            changed = changed | ~(
-                (F.col(v) == prev)
-                | (F.col(v).isNull() & prev.isNull())
-            )
+            changed = changed | ~F.col(v).eqNullSafe(prev)
         base = (
             base.withColumn(
                 "__keep",

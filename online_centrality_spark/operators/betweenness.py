@@ -86,7 +86,7 @@ def betweenness_from_pivots(
     acc = [deltas]
     for d in range(len(levels) - 2, -1, -1):
         succ = deltas.select(
-            "s",
+            F.col("s").alias("w_s"),
             F.col("v").alias("w"),
             F.col("sigma").alias("w_sigma"),
             F.col("delta").alias("w_delta"),
@@ -96,7 +96,7 @@ def betweenness_from_pivots(
             cur.join(adj, cur["v"] == adj["src"])
             .join(
                 succ,
-                (F.col("dst") == F.col("w")) & (cur["s"] == succ["s"]),
+                (F.col("dst") == F.col("w")) & (F.col("s") == F.col("w_s")),
             )
             .select(
                 cur["s"].alias("s"),
@@ -208,7 +208,7 @@ def edge_betweenness_from_pivots(
     edge_parts = []
     for d in range(len(levels) - 2, -1, -1):
         succ = deltas.select(
-            "s",
+            F.col("s").alias("w_s"),
             F.col("v").alias("w"),
             F.col("sigma").alias("w_sigma"),
             F.col("delta").alias("w_delta"),
@@ -218,7 +218,7 @@ def edge_betweenness_from_pivots(
             cur.join(adj, cur["v"] == adj["src"])
             .join(
                 succ,
-                (F.col("dst") == F.col("w")) & (cur["s"] == succ["s"]),
+                (F.col("dst") == F.col("w")) & (F.col("s") == F.col("w_s")),
             )
             .select(
                 cur["s"].alias("s"),

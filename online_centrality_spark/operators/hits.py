@@ -18,11 +18,12 @@ vectors exactly (the update is bilinear, scalars commute), which is what
 makes an unrolled-CTE SQL oracle possible; the engine normalizes every
 half-step for float headroom.
 
-Scale design mirrors ``static_pagerank``: a compact single-task numpy
-kernel under ``collect_threshold`` nodes, else iterative DataFrame
-joins with ``localCheckpoint`` lineage cuts per iteration, optional
-deterministic hub salting (functions/skew.py) on the score-lookup
-joins, and map-side partial aggregation on every groupBy.
+Two physical paths: a compact single-task numpy kernel
+(:func:`hits_numpy`) under ``collect_threshold`` nodes, else iterative
+DataFrame joins with an eager ``localCheckpoint`` after each half-step,
+one normalizing sum per half-step, optional deterministic hub salting
+(functions/skew.py) on the score-lookup joins, and map-side partial
+aggregation on every groupBy.
 """
 
 from __future__ import annotations

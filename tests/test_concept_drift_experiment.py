@@ -21,7 +21,7 @@ from online_centrality_spark.evaluation.kernels import (
 )
 from online_centrality_spark.functions.weights import ExponentialWeighter
 from online_centrality_spark.operators.static_katz import katz_numpy
-from online_centrality_spark.operators.static_pagerank import pagerank_numpy
+from online_centrality_spark.operators.static_pagerank import pagerank_power
 from online_centrality_spark.operators.temporal_katz import TemporalKatz
 from online_centrality_spark.operators.temporal_pagerank import TemporalPageRank
 from online_centrality_spark.plans.superstep import SuperstepDriver
@@ -66,7 +66,7 @@ def test_concept_drift_full_pipeline(spark, tmp_path):
     # sampled streams' weighted graphs)
     def gt(seg_src, seg_dst):
         nodes_k, katz = katz_numpy(seg_src, seg_dst, alpha=0.01, weighted=True)
-        nodes_p, pr = pagerank_numpy(
+        nodes_p, pr = pagerank_power(
             np.concatenate([seg_src]), np.concatenate([seg_dst]), strict=False
         )
         gk = np.zeros(n)

@@ -169,13 +169,16 @@ def test_ppr_distributed_matches_compact(spark):
     rng = random.Random(5)
     pairs = list({(rng.randrange(20), rng.randrange(20)) for _ in range(80)})
     pairs = [(s, d) for s, d in pairs if s != d]
-    compact = _ppr(spark, pairs, [0, 7])
-    dist = _ppr(spark, pairs, [0, 7], collect_threshold=0)
-    salted = _ppr(spark, pairs, [0, 7], collect_threshold=0, salt=3)
-    assert compact.keys() == dist.keys() == salted.keys()
-    for n in compact:
-        assert dist[n] == pytest.approx(compact[n], abs=1e-7)
-        assert salted[n] == pytest.approx(compact[n], abs=1e-7)
+    # second input seeds node 99, which has no out-edges: the start
+    # vector then puts rank on a dangling node
+    for g, seeds in [(pairs, [0, 7]), (pairs + [(3, 99)], [0, 99])]:
+        compact = _ppr(spark, g, seeds)
+        dist = _ppr(spark, g, seeds, collect_threshold=0)
+        salted = _ppr(spark, g, seeds, collect_threshold=0, salt=3)
+        assert compact.keys() == dist.keys() == salted.keys()
+        for n in compact:
+            assert dist[n] == pytest.approx(compact[n], abs=1e-7)
+            assert salted[n] == pytest.approx(compact[n], abs=1e-7)
 
 
 def test_ppr_no_valid_seed_raises(spark):

@@ -123,6 +123,30 @@ def test_scd2_intervals_validates_args(spark):
         scd2_intervals(df, [], "v", ["v"])
 
 
+def test_scd2_intervals_keeps_null_transitions(spark):
+    """A@10, NULL@20, A@30: a change to or from NULL is a change
+    (IS DISTINCT FROM), so compaction keeps all three intervals."""
+    import datetime
+
+    from online_centrality_spark.operators.asof import scd2_intervals
+
+    TS0 = datetime.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [("u1", TS0 + datetime.timedelta(seconds=s), v)
+         for s, v in [(10, "A"), (20, None), (30, "A")]],
+        "user_id string, ts timestamp, state string",
+    )
+    out = scd2_intervals(
+        df, ["user_id"], "ts", ["state"], dedup_consecutive=True
+    ).orderBy("valid_from_us").collect()
+    base = 1704067200 * 1_000_000
+    assert [(r["state"], r["valid_from_us"], r["valid_to_us"]) for r in out] == [
+        ("A", base + 10_000_000, base + 20_000_000),
+        (None, base + 20_000_000, base + 30_000_000),
+        ("A", base + 30_000_000, None),
+    ]
+
+
 def test_dataset_card_by_hand(spark):
     """3 docs, one exact duplicate pair, two languages with 'en'
     dominant -> every card field hand-computable."""
